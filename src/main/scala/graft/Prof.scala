@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Scaling-probe main (not part of the library surface): runs the
   * dedup/corpus family at 1x and 10x the bench corpus (sf0.1 x10 ~ sf1) and
-  * appends rows-vs-time records to PROGRESS.jsonl, validating the
+  * prints one `PROF` rows-vs-time record per probe to stdout, validating the
   * near-linearity the plan-shape tests imply. A capped/bucketed plan should
   * scale ~linearly in corpus size here; quadratic growth means a plan
   * regression that sf0.1 alone cannot surface.
@@ -29,8 +29,6 @@ object Prof {
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.1"
 
-    val log = new java.io.PrintWriter(
-      new java.io.FileWriter("/root/repo/PROGRESS.jsonl", true))
     def probe(op: String, scale: Int, inRows: Long)(f: => Long): Unit = {
       BroadcastLifecycle.releaseAll()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -39,7 +37,6 @@ object Prof {
       val sec = (System.nanoTime() - t0) / 1e9
       val line = f"""{"kind":"scale_probe","op":"$op%s","scale":$scale%d,"rows":$inRows%d,"out_rows":$outRows%d,"sec":$sec%.2f}"""
       println("PROF " + line)
-      log.println(line); log.flush()
     }
 
     import graft.data.{CorpusConfig, CorpusPipeline, Dedup}
@@ -568,7 +565,6 @@ object Prof {
     probe("range_shard", 1, o1)(shardCount(ord1))
     probe("range_shard", 10, o10)(shardCount(ord10))
 
-    log.close()
     spark.stop()
   }
 }

@@ -1,8 +1,8 @@
 package graft.idx
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.ml.linalg.{SparseVector, Vector}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.ml.linalg.SparseVector
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -63,12 +63,10 @@ object PackedGt {
   }
 }
 
-/** The per-row scoring kernel shared by the batch (mapPartitions) and
-  * streaming (per-row UDF) cos-sim paths: accumulate term-by-term dot
+/** The per-row scoring kernel of [[CosSimIndexerModel.transform]], which
+  * serves batch and streaming frames alike: accumulate term-by-term dot
   * products into a primitive scores array (touched-index bookkeeping instead
   * of hash maps — no boxing), then round/threshold/top-k by insertion.
-  * One implementation means the streaming variant is bit-identical to the
-  * batch one by construction, not by parallel maintenance.
   */
 private[graft] object CosSimKernel {
 
@@ -113,12 +111,12 @@ private[graft] object CosSimKernel {
 
   /** Reusable per-task scratch: per-block primitive score accumulators plus
     * a growable touched-index buffer. NOT thread-safe — one instance per
-    * task/partition (both call sites deserialize their own copy).
+    * task/partition.
     *
     * The per-block score arrays are an LRU cache capped at [[MaxCachedBlocks]]
-    * entries: without a cap, a long-lived task (the streaming per-row UDF
-    * keeps one scratch for the whole task) touching many blocks would pin
-    * sum(nRows)*8 bytes of accumulators. Rows are typically block-clustered,
+    * entries: without a cap, a long-lived task (one scratch serves every row
+    * of a partition) touching many blocks would pin sum(nRows)*8 bytes of
+    * accumulators. Rows are typically block-clustered,
     * so evictions are rare; an evicted block's array is simply re-allocated
     * (and re-zeroed by construction) on its next touch.
     */
@@ -262,12 +260,8 @@ final class CosSimIndexer(
     // executor -> driver boundary: collect the (small relative to names) GT
     // matrix once, like the reference (spark_cos_sim_matcher.py:690-714)
     val nTerms = model.vocabularySize
-    val collected = gtVec.collect().map { r =>
-      (r.getString(2), (r.getLong(0), r.get(1).asInstanceOf[Vector] match {
-        case s: SparseVector => s
-        case d               => d.toSparse
-      }))
-    }
+    val collected = gtVec.collect().map(r =>
+      (r.getString(2), (r.getLong(0), r.getAs[SparseVector](1))))
     val packed: Map[String, PackedGt] =
       collected.groupBy(_._1).map { case (b, rows) => b -> PackedGt.build(rows.map(_._2), nTerms) }
     val bc = graft.BroadcastLifecycle.track(gt.sparkSession.sparkContext.broadcast(packed))
@@ -283,8 +277,8 @@ final class CosSimIndexerModel(
   override def widen: CosSimIndexerModel =
     new CosSimIndexerModel(indexer.withNumCandidates(indexer.numCandidates + 1), tfidf, gtBc)
 
-  /** Destroy the broadcast GT index AND the fit-time idf broadcast
-    * (reference `_unpersist`, spark_cos_sim_matcher.py via
+  /** Destroy the broadcast GT index AND the fit-time term index + idf
+    * broadcast (reference `_unpersist`, spark_cos_sim_matcher.py via
     * spark_entity_matching.py:682-690). Widened copies share `gtBc` and
     * `tfidf`, so releasing either kills both; transform after release throws.
     */
@@ -299,38 +293,33 @@ final class CosSimIndexerModel(
     StructField("score", DoubleType, nullable = false),
     StructField("rank", IntegerType, nullable = false)))
 
-  /** names(uid, preprocessed) -> (uid, gt_uid, score, rank), top-k per uid. */
+  /** names(uid, preprocessed) -> (uid, gt_uid, score, rank), top-k per uid.
+    * Map-only, so the same plan runs on batch and streaming frames.
+    */
   def transform(names: DataFrame): DataFrame = {
-    val vecd = indexer.blockCol _
-    val withFeatures = vecd(tfidf.transform(names))
-      .select(col(indexer.uidCol).cast("long"), col("features"), col("block"))
-
+    val input = indexer.blockCol(names)
+      .select(col(indexer.uidCol).cast("long"), col(indexer.inputCol), col("block"))
     val bc    = gtBc
+    val tf    = tfidf
     val k     = indexer.numCandidates
     val lb    = indexer.lowerBound
     val prec  = indexer.scorePrecision
-    val spark = names.sparkSession
-
-    val rdd = withFeatures.rdd.mapPartitions { it =>
+    input.mapPartitions { rows =>
       // per-task scratch accumulator reused across rows (see CosSimKernel)
       val scratch = new CosSimKernel.Scratch
       val bestS = new Array[Double](k)
       val bestG = new Array[Int](k)
-      it.flatMap { r =>
-        val uid   = r.getLong(0)
-        val vec   = r.get(1).asInstanceOf[Vector]
+      rows.flatMap { r =>
         val block = r.getString(2)
         bc.value.get(block) match {
           case None => Iterator.empty
           case Some(gt) =>
-            val sv = vec match { case s: SparseVector => s; case d => d.toSparse }
-            val nBest = CosSimKernel.topK(gt, block, sv, k, lb, prec, scratch, bestS, bestG)
-            (0 until nBest).iterator.map { idx =>
-              Row(uid, gt.gtUids(bestG(idx)), bestS(idx), idx + 1)
-            }
+            val uid   = r.getLong(0)
+            val nBest = CosSimKernel.topK(gt, block, tf.vectorize(r.getString(1)),
+              k, lb, prec, scratch, bestS, bestG)
+            Iterator.tabulate(nBest)(i => Row(uid, gt.gtUids(bestG(i)), bestS(i), i + 1))
         }
       }
-    }
-    spark.createDataFrame(rdd, outSchema)
+    }(Encoders.row(outSchema))
   }
 }

@@ -24,7 +24,9 @@ import graft.operators.{GlobalRank, TopN}
   *
   * GT names are capped at `maxGtPerName` rows per identical name with a
   * deterministic ordering (reference uses F.rand() — we order by uid so the
-  * result is reproducible; spark_indexing_utils.py:158-196).
+  * result is reproducible; spark_indexing_utils.py:158-196). The cap drops
+  * rows, never a distinct name, so it runs after the ranking, on the
+  * materialized GT ranks.
   *
   * `mappingFunc` mirrors the reference's SNI `mapping_func` hook
   * (spark_sni.py:100-121): when set, names are sorted by the mapped value
@@ -39,13 +41,8 @@ final class SniIndexer(
     val inputCol: String = Cols.Preprocessed,
     val mappingFunc: Option[String => String] = None) extends NameIndexer with Serializable {
 
-  def fit(gt: DataFrame): SniIndexerModel = {
-    val deduped = TopN.takeTopNPerGroup(
-        gt.select(col(uidCol).cast("long").as(gtUidCol), col(inputCol)),
-        n = maxGtPerName, groupCols = Seq(inputCol), orderBy = Seq(col(gtUidCol)),
-        keepRankCol = false)
-    new SniIndexerModel(this, deduped)
-  }
+  def fit(gt: DataFrame): SniIndexerModel =
+    new SniIndexerModel(this, gt.select(col(uidCol).cast("long").as(gtUidCol), col(inputCol)))
 }
 
 final class SniIndexerModel(val indexer: SniIndexer, val gt: DataFrame) extends NameIndexerModel {
@@ -67,32 +64,28 @@ final class SniIndexerModel(val indexer: SniIndexer, val gt: DataFrame) extends 
   /** names(uid, preprocessed) -> (uid, gt_uid, score, rank).
     * rank = |offset| (0 is an exact name hit).
     *
-    * The rank relation is materialized ONCE (localCheckpoint) before the 2w+1
-    * offset joins — without it every offset join replays the full global sort
-    * (the reference caches here too, spark_sni.py:241). `ranked` is cached only
-    * while gt/nm ranks materialize, then released.
+    * GT and names rows go through ONE tagged relation: ranked by a join with
+    * the global rank of their distinct sort keys and materialized once
+    * (localCheckpoint), so the band join and the GT cap read the ranks
+    * without replaying the global sort (the reference caches here too,
+    * spark_sni.py:241).
     */
   def transform(names: DataFrame): DataFrame = {
     val in  = indexer.inputCol
     val w   = indexer.window
-    val nm  = names.select(col(indexer.uidCol).cast("long"), col(in))
+    val tagged = gt.select(col(indexer.gtUidCol).as("__id"), col(in), lit(true).as("__gt"))
+      .union(names.select(col(indexer.uidCol).cast("long").as("__id"), col(in), lit(false).as("__gt")))
+      .withColumn("__sni", sniKey(col(in)))
+    val ranks = GlobalRank.withGlobalRank(tagged.select("__sni").distinct(), "r", Seq("__sni"))
+    val ranked = tagged.join(ranks, "__sni").select("__id", in, "__gt", "r").localCheckpoint()
 
-    val allNames = gt.select(col(in)).union(nm.select(col(in))).distinct()
-      .select(sniKey(col(in)).as("__sni"))
-      .distinct()
-    val ranked = GlobalRank.withGlobalRank(allNames, "r", Seq("__sni"))
-      .select("__sni", "r").cache()
-
-    val gtRanked = gt.withColumn("__sni", sniKey(col(in))).join(ranked, "__sni")
-      .select(col(indexer.gtUidCol), col("r").as("gt_r"), col(in).as("gt_nm"))
-      .localCheckpoint()
-    val nmRanked = nm.withColumn("__sni", sniKey(col(in))).join(ranked, "__sni")
-      .select(col(indexer.uidCol), col("r"))
-      .localCheckpoint()
-    ranked.unpersist()
-
-    nmRanked
-      .select(col(indexer.uidCol), col("r"),
+    val gtRanked = TopN.takeTopNPerGroup(
+        ranked.filter(col("__gt"))
+          .select(col("__id").as(indexer.gtUidCol), col(in), col("r").as("gt_r")),
+        n = indexer.maxGtPerName, groupCols = Seq(in), orderBy = Seq(col(indexer.gtUidCol)),
+        keepRankCol = false)
+    ranked.filter(!col("__gt"))
+      .select(col("__id").as(indexer.uidCol), col("r"),
         explode(lit((-w to w).toArray)).as("off"))
       .join(gtRanked, col("r") + col("off") === col("gt_r"))
       .select(

@@ -1,24 +1,35 @@
 package graft.idx
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, IDF, NGram, RegexTokenizer}
-import org.apache.spark.ml.linalg.{SparseVector, Vector, Vectors}
+import org.apache.spark.ml.linalg.{SparseVector, Vector}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Normalized TF-IDF vectorizer for name matching.
   *
-  * Semantics of the reference's vectorizer pipeline
-  * (/root/reference/emm/indexing/spark_cos_sim_matcher.py:158-183 and
-  * spark_normalized_tfidf.py, pandas_normalized_tfidf.py:60-148):
+  * Semantics of the reference's vectorizer pipeline (emm/indexing
+  * spark_cos_sim_matcher.py, spark_normalized_tfidf.py and
+  * pandas_normalized_tfidf.py), with Spark ML's RegexTokenizer / NGram /
+  * CountVectorizer / IDF conventions:
   *
-  *  - tokenize (word: runs of [letter|digit]; char: every character),
-  *  - n-grams, count-vectorize (optionally binary) with a vocab cap,
-  *  - idf = ln((m+1)/(df+1))  (Spark IDF's smoothed formula == sklearn's
-  *    smoothed idf minus 1, which is what the reference aligns both to),
+  *  - tokenize: lowercase (`toLowerCase()`), then every match of the token
+  *    pattern (word: runs of [letter|digit]; char: every character);
+  *  - n-grams: n consecutive tokens joined by a space, none when a name has
+  *    fewer than n tokens;
+  *  - vocabulary: the GT's n-grams by total occurrence count descending, then
+  *    term ascending, capped at `vocabSize`;
+  *  - tf: occurrence counts of in-vocabulary n-grams (1.0 each when `binary`);
+  *  - idf = ln((m+1)/(df+1)), m = GT rows, df = GT rows holding the term
+  *    (Spark IDF's smoothed formula == sklearn's smoothed idf minus 1, which
+  *    is what the reference aligns both to);
   *  - L2 normalization that accounts for out-of-vocabulary tokens: each OOV
   *    token contributes max(idf)^2 to the squared norm, so names full of
-  *    unseen tokens get proportionally lower scores.
+  *    unseen tokens get proportionally lower scores. Indices ascend and the
+  *    squared norm is summed in index order.
+  *
+  * Fit is one term-count aggregate over the GT; the term index and the idf
+  * ship together in one tracked broadcast. An empty vocabulary (empty GT, or
+  * no name long enough for an n-gram) vectorizes every name to zero.
   *
   * We keep weights in double (not the reference's float32): exact IEEE doubles
   * are what the DuckDB oracle computes, and the broadcast size stays modest.
@@ -31,101 +42,137 @@ final class TfidfVectorizer(
     val inputCol: String = graft.Cols.Preprocessed,
     val outputCol: String = "features") extends Serializable {
 
-  private def tokenize(df: DataFrame): DataFrame = {
-    val pattern = if (tokenizer == "words") "[\\p{IsAlphabetic}\\p{Digit}]+" else "."
-    val tok = new RegexTokenizer()
-      .setInputCol(inputCol).setOutputCol("tokens")
-      .setPattern(pattern).setGaps(false).setToLowercase(true)
-    val grams = new NGram().setInputCol("tokens").setOutputCol("ngram_tokens").setN(ngram)
-    grams.transform(tok.transform(df))
+  private val pattern = java.util.regex.Pattern.compile(
+    if (tokenizer == "words") "[\\p{IsAlphabetic}\\p{Digit}]+" else ".")
+
+  /** Lowercased pattern matches of `text`; a null name has no tokens. */
+  def tokens(text: String): Array[String] = {
+    if (text == null) return Array.empty
+    val m = pattern.matcher(text.toLowerCase())
+    val out = Array.newBuilder[String]
+    while (m.find()) out += m.group()
+    out.result()
   }
 
+  /** Runs of `ngram` consecutive tokens joined by a space. */
+  def ngrams(toks: Array[String]): Array[String] =
+    if (ngram == 1) toks
+    else Array.tabulate(math.max(toks.length - ngram + 1, 0))(
+      i => toks.slice(i, i + ngram).mkString(" "))
+
+  /** The n-grams of `text`: the one tokenize-plus-n-gram step of fit and
+    * transform.
+    */
+  def grams(text: String): Array[String] = ngrams(tokens(text))
+
   def fit(gt: DataFrame): TfidfModel = {
-    val toks = tokenize(gt)
-    // empty GT, or a corpus that yields no n-gram tokens at all (e.g. word
-    // 2-grams over single-word names): MLlib's CountVectorizer and IDF both
-    // reject an empty vocabulary, so fall back to a single sentinel term
-    // with idf weight 0.0 — even if an input ever produced that token, it
-    // would contribute zero weight, so every name vectorizes to zero and
-    // matches nothing, the correct degenerate behavior
-    // the idf weight array is per-fit constant: broadcast it ONCE here (not
-    // per transform call — at the 2^25 vocab cap that would re-ship up to
-    // 256 MB on every batch/stream/widened transform) and register it for
-    // lifecycle release alongside the packed GT blocks
-    def mkModel(cvm: CountVectorizerModel, idfArr: Array[Double], maxIdfSq: Double) =
-      new TfidfModel(this, cvm,
-        graft.BroadcastLifecycle.track(gt.sparkSession.sparkContext.broadcast(idfArr)),
-        maxIdfSq)
-    if (toks.select(explode(col("ngram_tokens"))).isEmpty)
-      return mkModel(
-        new CountVectorizerModel(Array("\u0000")).setInputCol("ngram_tokens")
-          .setOutputCol("tf"),
-        Array(0.0), 0.0)
-    val cv = new CountVectorizer()
-      .setInputCol("ngram_tokens").setOutputCol("tf")
-      .setVocabSize(vocabSize).setBinary(binary)
-      .fit(toks)
-    val tf  = cv.transform(toks)
-    val idf = new IDF().setInputCol("tf").setOutputCol("idf_features").fit(tf)
-    val idfArr = idf.idf.toArray
-    val maxIdfSq = if (idfArr.isEmpty) 0.0 else { val m = idfArr.max; m * m }
-    mkModel(cv, idfArr, maxIdfSq)
+    val termCounts = udf((text: String) => grams(text).groupMapReduce(identity)(_ => 1L)(_ + _))
+    // one row per term: total occurrences and the number of GT rows holding it
+    val stats = gt.select(explode(termCounts(col(inputCol))).as(Seq("term", "n")))
+      .groupBy("term").agg(sum("n"), count(lit(1)))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .sortBy { case (term, n, _) => (-n, term) }
+      .take(vocabSize)
+    val m = gt.count()
+    val terms = new TfidfTerms(stats.map(_._1),
+      stats.map { case (_, _, df) => math.log((m + 1.0) / (df + 1.0)) })
+    new TfidfModel(this,
+      graft.BroadcastLifecycle.track(gt.sparkSession.sparkContext.broadcast(terms)))
+  }
+}
+
+/** A fitted vocabulary and its idf weights: column j is `vocabulary(j)`. */
+final class TfidfTerms(val vocabulary: Array[String], val idf: Array[Double])
+    extends Serializable {
+  val maxIdfSq: Double = if (idf.isEmpty) 0.0 else { val m = idf.max; m * m }
+
+  /** term -> column, built once per deserialized copy. */
+  @transient lazy val index: java.util.HashMap[String, Integer] = {
+    val h = new java.util.HashMap[String, Integer](vocabulary.length * 2)
+    vocabulary.indices.foreach(j => h.put(vocabulary(j), j))
+    h
   }
 }
 
 final class TfidfModel(
     vec: TfidfVectorizer,
-    val cv: CountVectorizerModel,
-    val idfBc: Broadcast[Array[Double]],
-    val maxIdfSq: Double) extends Serializable {
+    val termsBc: Broadcast[TfidfTerms]) extends Serializable {
 
-  def vocabularySize: Int = cv.vocabulary.length
+  def vocabulary: Array[String] = termsBc.value.vocabulary
+
+  def vocabularySize: Int = vocabulary.length
 
   /** The fitted idf weights (driver-side view of the broadcast). */
-  def idf: Array[Double] = idfBc.value
+  def idf: Array[Double] = termsBc.value.idf
 
-  /** Destroy the fit-time idf broadcast; the model is dead afterwards.
-    * Called from `CosSimIndexerModel.release()` so the lifecycle covers
-    * every broadcast a fitted cos-sim stack owns.
+  /** Destroy the fit-time term index + idf broadcast; the model is dead
+    * afterwards. Called from `CosSimIndexerModel.release()` so the lifecycle
+    * covers every broadcast a fitted cos-sim stack owns.
     */
-  def release(): Unit = graft.BroadcastLifecycle.release(idfBc)
+  def release(): Unit = graft.BroadcastLifecycle.release(termsBc)
 
-  /** Adds `ngram_tokens`, `tf` and the normalized `features` columns. */
-  def transform(df: DataFrame): DataFrame = {
-    val pattern = if (vec.tokenizer == "words") "[\\p{IsAlphabetic}\\p{Digit}]+" else "."
-    val tok = new RegexTokenizer()
-      .setInputCol(vec.inputCol).setOutputCol("tokens")
-      .setPattern(pattern).setGaps(false).setToLowercase(true)
-    val grams  = new NGram().setInputCol("tokens").setOutputCol("ngram_tokens").setN(vec.ngram)
-    val withTf = cv.transform(grams.transform(tok.transform(df)))
-
-    val idfBcRef = idfBc // fit-time broadcast; closure must not capture `this`
-    val binaryCv = vec.binary
-    val maxIdf2  = maxIdfSq
-
-    val normalize = udf { (tf: Vector, tokens: Seq[String]) =>
-      val sv  = tf match { case s: SparseVector => s; case d => d.toSparse }
-      val w   = idfBcRef.value
-      val nAll =
-        if (binaryCv) { val s = new java.util.HashSet[String](); tokens.foreach(s.add); s.size }
-        else tokens.size
-      var matched = 0.0
-      var sumSq   = 0.0
-      val vals    = new Array[Double](sv.indices.length)
-      var i = 0
-      while (i < sv.indices.length) {
-        matched += sv.values(i)
-        val v = sv.values(i) * w(sv.indices(i))
-        vals(i) = v
-        sumSq += v * v
-        i += 1
-      }
-      val oov  = math.max(nAll - matched, 0.0)
-      val norm = math.max(math.sqrt(sumSq + oov * maxIdf2), 1e-9)
-      i = 0
-      while (i < vals.length) { vals(i) /= norm; i += 1 }
-      Vectors.sparse(sv.size, sv.indices, vals)
+  /** Counts of the in-vocabulary `grams` by ascending column. */
+  private def termFreq(grams: Array[String]): SparseVector = {
+    val terms = termsBc.value
+    val cols = new Array[Int](grams.length)
+    var n = 0
+    grams.foreach { g =>
+      val j = terms.index.get(g)
+      if (j != null) { cols(n) = j; n += 1 }
     }
-    withTf.withColumn(vec.outputCol, normalize(col("tf"), col("ngram_tokens")))
+    java.util.Arrays.sort(cols, 0, n)
+    val indices = new Array[Int](n)
+    val values = new Array[Double](n)
+    var d = 0
+    var i = 0
+    while (i < n) {
+      if (d > 0 && indices(d - 1) == cols(i)) { if (!vec.binary) values(d - 1) += 1.0 }
+      else { indices(d) = cols(i); values(d) = 1.0; d += 1 }
+      i += 1
+    }
+    new SparseVector(terms.vocabulary.length,
+      java.util.Arrays.copyOf(indices, d), java.util.Arrays.copyOf(values, d))
+  }
+
+  /** OOV-aware L2-normalized tf-idf of `tf`, the term counts of `grams`. */
+  private def features(tf: SparseVector, grams: Array[String]): SparseVector = {
+    val terms = termsBc.value
+    val nAll =
+      if (vec.binary) { val s = new java.util.HashSet[String](); grams.foreach(s.add); s.size }
+      else grams.length
+    var matched = 0.0
+    var sumSq = 0.0
+    val vals = new Array[Double](tf.indices.length)
+    var i = 0
+    while (i < vals.length) {
+      matched += tf.values(i)
+      val v = tf.values(i) * terms.idf(tf.indices(i))
+      vals(i) = v
+      sumSq += v * v
+      i += 1
+    }
+    val oov = math.max(nAll - matched, 0.0)
+    val norm = math.max(math.sqrt(sumSq + oov * terms.maxIdfSq), 1e-9)
+    i = 0
+    while (i < vals.length) { vals(i) /= norm; i += 1 }
+    new SparseVector(tf.size, tf.indices, vals)
+  }
+
+  /** The normalized `features` vector of one name. */
+  private[idx] def vectorize(text: String): SparseVector = {
+    val g = vec.grams(text)
+    features(termFreq(g), g)
+  }
+
+  /** Adds the `tokens`, `ngram_tokens`, `tf` and normalized `features` columns. */
+  def transform(df: DataFrame): DataFrame = {
+    val toks = udf((text: String) => vec.tokens(text))
+    val grams = udf((t: Seq[String]) => vec.ngrams(t.toArray))
+    val tf = udf((g: Seq[String]) => termFreq(g.toArray): Vector)
+    val norm = udf((v: Vector, g: Seq[String]) => features(v.toSparse, g.toArray): Vector)
+    df.withColumn("tokens", toks(col(vec.inputCol)))
+      .withColumn("ngram_tokens", grams(col("tokens")))
+      .withColumn("tf", tf(col("ngram_tokens")))
+      .withColumn(vec.outputCol, norm(col("tf"), col("ngram_tokens")))
   }
 }

@@ -125,8 +125,8 @@ object Louvain {
     // directed edge relation unsorted (a per-level cached-adjacency
     // variant was probed and measured SLOWER at sf0.1 local[32] —
     // columnar-cache decode per sweep cost more than the in-memory
-    // shuffle it saved; see OPTIMIZATION_r18.md). Build-size assumption
-    // and scale probe: PageRank.scala / PROBES.md r19.
+    // shuffle it saved; see OPTIMIZATION_r18.md). Build-size assumption:
+    // PageRank.scala.
     val kic = dir
       .join(lbl.select(col("n").as("nbr"), col("lbl").as("c"))
         .hint("shuffle_hash"), Seq("nbr"))

@@ -93,8 +93,7 @@ object PageRank {
       // handling does not split a build side, but node-grain state is
       // hash-partitioned on unique node ids — per-partition row counts
       // are ~uniform by construction (no hot-key skew is possible on a
-      // unique key). Measured at 40× the bench graph in PROBES.md r19
-      // ("shj scale probe").
+      // unique key).
       val inc = withDeg.join(ranks.hint("shuffle_hash"),
           col("src") === col("node"))
         .select(col("dst").as("node"),

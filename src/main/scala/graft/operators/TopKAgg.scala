@@ -11,12 +11,12 @@ import org.apache.spark.sql.functions.udaf
   * on the MAP side, so only k rows per (partition, group) ever reach the
   * exchange.
   *
-  * MEASURED trade (PROGRESS.jsonl topk_aggregator vs topk_window, 1M rows
-  * x 150 groups): the codegen'd window SORT is ~1.6x faster at this volume
-  * — the udaf boundary pays per-row tuple encode/decode that whole-stage
-  * codegen never does. Reach for the aggregator when the SHUFFLE is the
-  * binding constraint (per-group volume far beyond executor sort memory,
-  * or a network-bound cluster), not as a default top-n.
+  * Trade-off: the codegen'd window SORT is the faster form while groups
+  * fit executor sort memory — the udaf boundary pays per-row tuple
+  * encode/decode that whole-stage codegen never does. Reach for the
+  * aggregator when the SHUFFLE is the binding constraint (per-group volume
+  * far beyond executor sort memory, or a network-bound cluster), not as a
+  * default top-n.
   *
   * Total order: value DESC, id ASC — identical to the q09 window's
   * (`desc`, key...) ordering, so results are deterministic under any merge

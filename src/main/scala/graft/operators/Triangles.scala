@@ -88,9 +88,9 @@ object Triangles {
       // bytes/key, and the build's transient peak (partial filters
       // arriving in the driver-side treeAggregate reduce + the chunked
       // broadcast copy) is ~4× the filter, so the cap allows filters up
-      // to maxHeap/16 — maxHeap/20 edges (8 GiB driver → ~400M edges;
-      // measured probe in PROBES.md r19). Beyond that the plain join
-      // (with AQE skew splitting) is the honest fallback.
+      // to maxHeap/16 — maxHeap/20 edges (8 GiB driver → ~400M edges).
+      // Beyond that the plain join (with AQE skew splitting) is the honest
+      // fallback.
       //
       // Advisory-partition-size pins were PROBED here and rejected (r17
       // PROBES entry, the q138 drift directive): at sf0.1 the default

@@ -644,10 +644,10 @@ object SourceStreamQueries {
       runToMemory(s, agg)
     },
 
-    // the q30 cossim candidate generation executed through the STREAMING
-    // variant (per-row UDF kernel, stream-safe projections, no actions):
-    // bit-identical to the batch kernel, so it shares q30's relational
-    // oracle — the strongest check the streaming path can get
+    // the q30 cossim candidate generation executed on a STREAM: the same
+    // map-only transform the batch path runs (stream-safe projections, no
+    // actions), so it shares q30's relational oracle — the strongest check
+    // the streaming path can get
     "q57_streaming_cossim" -> { (s, dir) =>
       val gt = t(s, dir, "part").select(
         col("p_partkey").cast("long").as(Cols.Uid),

@@ -1,76 +1,22 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.Cols
-import graft.idx.{CosSimIndexerModel, CosSimKernel}
+import graft.idx.CosSimIndexerModel
 
-/** Streaming-compatible variants of the matching operators.
+/** Streaming entry point of the cos-sim matcher.
   *
-  * The reference's `streaming=True` flag switches the cos-sim matcher from
+  * The reference's `streaming=True` flag switches its cos-sim matcher from
   * mapPartitions to a per-row UDF so the transform stays expressible on a
-  * streaming DataFrame (no repartition/count actions) —
-  * /root/reference/emm/indexing/spark_cos_sim_matcher.py:295-297,634-643.
-  * Same here: the broadcast GT index is the stream-static side; the per-row
-  * UDF emits the candidate array, then posexplode (stream-safe) flattens it.
-  * Scoring runs the SAME primitive-array kernel as the batch path
-  * ([[CosSimKernel]]) — only the row-at-a-time call shape differs, so results
-  * are bit-identical and the per-row cost stays free of boxed hash maps.
+  * streaming DataFrame (spark_cos_sim_matcher.py:295-297,634-643). Here no
+  * switch is needed: [[CosSimIndexerModel.transform]] is one map-only
+  * `Dataset.mapPartitions` against the stream-static broadcast GT index, so
+  * the batch plan runs unchanged on a stream and the answers agree by
+  * construction.
   */
 object StreamingMatch {
 
-  private val candType = ArrayType(StructType(Seq(
-    StructField("gt_uid", LongType, nullable = false),
-    StructField("score", DoubleType, nullable = false))), containsNull = false)
-
-  /** Serializable kernel holder: each deserialized task copy lazily builds
-    * its own scratch, so the UDF stays allocation-free across rows without
-    * sharing mutable state across tasks.
-    */
-  private final class PerRowKernel(k: Int) extends Serializable {
-    @transient private lazy val scratch = new CosSimKernel.Scratch
-    @transient private lazy val bestS   = new Array[Double](k)
-    @transient private lazy val bestG   = new Array[Int](k)
-    def apply(gt: graft.idx.PackedGt, block: String,
-              sv: org.apache.spark.ml.linalg.SparseVector,
-              lb: Double, prec: Int): Seq[(Long, Double)] = {
-      val nBest = CosSimKernel.topK(gt, block, sv, k, lb, prec, scratch, bestS, bestG)
-      (0 until nBest).map(idx => (gt.gtUids(bestG(idx)), bestS(idx)))
-    }
-  }
-
-  /** Per-row top-k match usable on streaming DataFrames.
-    * Input must already carry the vectorized `features` and `block` columns
-    * (TfidfModel.transform + blockCol are projection-only, stream-safe).
-    */
-  def transformStreaming(model: CosSimIndexerModel, names: DataFrame): DataFrame = {
-    val bc   = model.gtBc
-    val k    = model.indexer.numCandidates
-    val lb   = model.indexer.lowerBound
-    val prec = model.indexer.scorePrecision
-    val kernel = new PerRowKernel(k)
-
-    val matchOne = udf { (vec: org.apache.spark.ml.linalg.Vector, block: String) =>
-      bc.value.get(block) match {
-        case None => Seq.empty[(Long, Double)]
-        case Some(gt) =>
-          val sv = vec match {
-            case s: org.apache.spark.ml.linalg.SparseVector => s
-            case d => d.toSparse
-          }
-          kernel(gt, block, sv, lb, prec)
-      }
-    }
-
-    val vectorized = model.indexer.blockCol(model.tfidf.transform(names))
-    vectorized
-      .withColumn("candidates", matchOne(col("features"), col("block")))
-      .select(col(model.indexer.uidCol), posexplode(col("candidates")).as(Seq("pos", "cand")))
-      .select(col(model.indexer.uidCol),
-              col("cand._1").as(Cols.GtUid),
-              col("cand._2").as("score"),
-              (col("pos") + 1).cast("int").as("rank"))
-  }
+  /** Top-k match of a (streaming or batch) names frame. */
+  def transformStreaming(model: CosSimIndexerModel, names: DataFrame): DataFrame =
+    model.transform(names)
 }

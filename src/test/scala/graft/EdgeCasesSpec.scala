@@ -110,14 +110,6 @@ class EdgeCasesSpec extends SparkSpec {
     assert(kernel == indexed, s"kernel=$kernel indexed=$indexed")
   }
 
-  test("gt whose names produce no ngram tokens fits an inert vectorizer") {
-    // word 2-grams over single-word names: every row tokenizes, no 2-gram
-    val gt = Seq((1L, "acme"), (2L, "globex")).toDF(Cols.Uid, Cols.Preprocessed)
-    val m = new CosSimIndexer(tokenizer = "words", ngram = 2,
-      numCandidates = 3, lowerBound = 0.1).fit(gt)
-    assert(m.transform(oneName).count() == 0)
-  }
-
   test("training-pair assembly with null entity ids keeps every name") {
     val parts = spark.read.parquet(s"$sf/part.parquet")
       .select(col("p_partkey").cast("long").as(Cols.Uid),

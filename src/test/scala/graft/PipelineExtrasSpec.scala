@@ -3,12 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.idx.CosSimIndexer
 import graft.ml.{Thresholds, TrainData}
 import graft.sources.Sources
-import graft.streaming.StreamingMatch
 
 class PipelineExtrasSpec extends SparkSpec {
   import spark.implicits._
@@ -55,31 +53,6 @@ class PipelineExtrasSpec extends SparkSpec {
     val n2 = TrainData.noise("globex corporation holdings", 7L)
     assert(n1 == n2)
     assert(n1 != "globex corporation holdings")
-  }
-
-  test("streaming cossim transform matches batch results") {
-    val dir = Files.createTempDirectory("graftstream").toString
-    val gt = spark.read.parquet(s"$sf/part.parquet")
-      .select(col("p_partkey").cast("long").as(Cols.Uid), col("p_name").as(Cols.Preprocessed))
-    gt.filter(col(Cols.Uid) < 50).write.mode("overwrite").parquet(s"$dir/names")
-
-    val idx   = new CosSimIndexer(numCandidates = 3, lowerBound = 0.5)
-    val model = idx.fit(gt)
-
-    val schema = spark.read.parquet(s"$dir/names").schema
-    val stream = spark.readStream.schema(schema).parquet(s"$dir/names")
-    val out = StreamingMatch.transformStreaming(model, stream)
-    val q = out.writeStream.format("memory").queryName("stream_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-
-    val streamed = spark.sql("SELECT * FROM stream_out")
-    val batch = model.transform(spark.read.parquet(s"$dir/names"))
-    // same pair set and scores from the UDF path and the mapPartitions path
-    assert(streamed.count() == batch.count())
-    val diff = streamed.select(Cols.Uid, Cols.GtUid, "score")
-      .exceptAll(batch.select(Cols.Uid, Cols.GtUid, "score")).count()
-    assert(diff == 0)
   }
 
   test("model persistence round-trip") {

@@ -1,61 +1,9 @@
 package graft
 
-import org.apache.spark.graft.BroadcastProbe
-import org.apache.spark.sql.functions._
-
-import graft.idx.CosSimIndexer
-
-/** Round-5 additions: broadcast/model release lifecycle. */
+/** Round-5 additions: operator-internal broadcast release. */
 class Round5Spec extends SparkSpec {
 
   import spark.implicits._
-
-  private def gtDf = Seq(
-    (1L, 1L, "acme industries"),
-    (2L, 2L, "zenith corp"),
-    (3L, 3L, "nadir holdings")).toDF("uid", "entity_id", "preprocessed")
-
-  private def eventually(timeoutMs: Long = 15000)(cond: => Boolean): Boolean = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var ok = cond
-    while (!ok && System.currentTimeMillis() < deadline) { Thread.sleep(100); ok = cond }
-    ok
-  }
-
-  test("CosSimIndexerModel.release destroys the broadcast GT blocks") {
-    val model = new CosSimIndexer(numCandidates = 3, lowerBound = 0.1).fit(gtDf)
-    val bcId = model.gtBc.id
-    // materialize once so the blocks actually exist on the block manager
-    val n = model.transform(Seq((10L, "acme industries")).toDF("uid", "preprocessed")).count()
-    assert(n >= 1)
-    assert(BroadcastProbe.broadcastBlocks(bcId).nonEmpty)
-
-    model.release()
-    // driver handle is invalid immediately...
-    intercept[Exception] { model.gtBc.value }
-    // ...and the storage blocks disappear (destroy is async, so poll)
-    assert(eventually()(BroadcastProbe.broadcastBlocks(bcId).isEmpty),
-      s"broadcast_$bcId blocks still present after release()")
-    // double release is a safe no-op
-    model.release()
-  }
-
-  test("EntityMatchingModel.release cascades to every indexer and widened copies share state") {
-    val gt = Seq((1L, "alpha beta gmbh"), (2L, "gamma delta llc"))
-      .toDF("entity_id", "name")
-    val em = EntityMatching(EmParams(checkUid = false)).fit(gt)
-    val cosBcs = em.candidateModel.models.collect {
-      case m: graft.idx.CosSimIndexerModel => m.gtBc
-    }
-    assert(cosBcs.size == 2) // default indexer set has two cossim indexers
-    val widenedShares = em.candidateModel.widened.models.collect {
-      case m: graft.idx.CosSimIndexerModel => m.gtBc
-    }
-    assert(widenedShares.map(_.id) == cosBcs.map(_.id),
-      "widen must share the fitted broadcast, not copy it")
-    em.release()
-    cosBcs.foreach(bc => intercept[Exception] { bc.value })
-  }
 
   test("BroadcastLifecycle.releaseAll drops operator-internal broadcasts (Knn)") {
     // Start from a clean registry: trackedCount purges GC-collected weak

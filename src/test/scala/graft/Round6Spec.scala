@@ -5,72 +5,21 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.idx.{CosSimIndexer, CosSimKernel}
+import graft.idx.CosSimIndexer
 import graft.multimodal.BinaryMedia
 
-/** Round-6 additions: fit-time idf broadcast lifecycle, weak-reference
-  * registry, allocation-free HALF_UP rounding, video frame stats, codec
-  * header hardening.
+/** Round-6 additions: weak-reference broadcast registry, video frame stats,
+  * codec header hardening.
   */
 class Round6Spec extends SparkSpec {
 
   import spark.implicits._
-
-  private def gtDf = Seq(
-    (1L, 1L, "acme industries"),
-    (2L, 2L, "zenith corp"),
-    (3L, 3L, "nadir holdings")).toDF("uid", "entity_id", "preprocessed")
 
   private def eventually(timeoutMs: Long = 15000)(cond: => Boolean): Boolean = {
     val deadline = System.currentTimeMillis() + timeoutMs
     var ok = cond
     while (!ok && System.currentTimeMillis() < deadline) { Thread.sleep(100); ok = cond }
     ok
-  }
-
-  // ===== allocation-free HALF_UP ==========================================
-
-  test("roundHalfUp is bit-identical to the BigDecimal HALF_UP expansion") {
-    def exact(x: Double, p: Int): Double =
-      BigDecimal(x).setScale(p, BigDecimal.RoundingMode.HALF_UP).toDouble
-    // exact binary ties (x.5 at prec 0) must round away from zero
-    for (x <- Seq(0.5, 1.5, 2.5, -0.5, -1.5, 3.0, -0.0, 0.0))
-      assert(java.lang.Double.compare(CosSimKernel.roundHalfUp(x, 0), exact(x, 0)) == 0,
-        s"prec=0 x=$x")
-    // deterministic sweep: cosine-like values, near-tie grids, negatives
-    val rnd = new scala.util.Random(42)
-    val samples =
-      (0 until 20000).map(_ => rnd.nextDouble() * 1.2) ++
-      (0 until 5000).map(_ => -rnd.nextDouble()) ++
-      // values engineered close to the .5 boundary at prec 9
-      (0 until 2000).map(i => (i.toLong * 1000 + 500).toDouble / 1e12) ++
-      (0 until 2000).map(i => (i.toLong * 1000 + 499).toDouble / 1e12 + 1e-13) ++
-      Seq(0.1234567895, 0.9999999995, 1.0000000005, 4.9999999999e-10, 5.0000000001e-10)
-    for (x <- samples; p <- Seq(2, 6, 9)) {
-      val got = CosSimKernel.roundHalfUp(x, p)
-      val want = exact(x, p)
-      assert(java.lang.Double.compare(got, want) == 0,
-        s"prec=$p x=$x got=$got want=$want")
-    }
-  }
-
-  // ===== fit-time idf broadcast lifecycle =================================
-
-  test("TfidfModel broadcasts idf once at fit; transform adds nothing; release drops it") {
-    BroadcastLifecycle.releaseAll()
-    val model = new CosSimIndexer(numCandidates = 3, lowerBound = 0.1).fit(gtDf)
-    // exactly two tracked broadcasts per fitted cos-sim stack: packed GT + idf
-    assert(BroadcastLifecycle.trackedCount == 2,
-      s"expected gt+idf tracked, got ${BroadcastLifecycle.trackedCount}")
-    val names = Seq((10L, "acme industries"), (11L, "zenith corp"))
-      .toDF("uid", "preprocessed")
-    (1 to 3).foreach(_ => assert(model.transform(names).count() >= 1))
-    assert(BroadcastLifecycle.trackedCount == 2,
-      "transform must NOT create new tracked broadcasts")
-    model.release()
-    assert(BroadcastLifecycle.trackedCount == 0)
-    // transform after release is dead (idf broadcast destroyed)
-    intercept[Exception] { model.tfidf.idfBc.value }
   }
 
   // ===== weak-reference registry ==========================================
@@ -508,17 +457,5 @@ class Round6Spec extends SparkSpec {
     val asof = graft.operators.AsofJoin
       .backward(left, emptyRight, Seq("k"), "ts", "rts", Seq("v")).collect()
     assert(asof.length == 1 && asof.head.isNullAt(3))
-  }
-
-  // ===== kernel scratch memory bound ======================================
-
-  test("Scratch caps cached per-block score arrays") {
-    val scratch = new CosSimKernel.Scratch
-    (0 until 5 * CosSimKernel.MaxCachedBlocks)
-      .foreach(i => scratch.scoresFor("block" + i, 16))
-    assert(scratch.blockScores.size() == CosSimKernel.MaxCachedBlocks)
-    // LRU: the most recently touched block survives
-    assert(scratch.blockScores.containsKey(
-      "block" + (5 * CosSimKernel.MaxCachedBlocks - 1)))
   }
 }

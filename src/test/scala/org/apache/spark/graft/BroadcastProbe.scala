@@ -18,4 +18,13 @@ object BroadcastProbe {
       .getMatchingBlockIds(filter, askStorageEndpoints = true)
       .map(_.toString)
   }
+
+  /** The deserialized broadcast values the driver's block manager holds. */
+  def driverValues(): Seq[Any] = {
+    val bm = SparkEnv.get.blockManager
+    bm.getMatchingBlockIds {
+      case BroadcastBlockId(_, "") => true
+      case _                       => false
+    }.flatMap(id => bm.getLocalValues(id).toSeq.flatMap(_.data.toList)) // toList releases the read lock
+  }
 }
